@@ -86,52 +86,106 @@ def autotag_batch_sink(
     """Fully-distributed autotag sink: the document store is a keyed
     parquet table, and the whole R12->R15 composition runs as DataFrame
     ops — lookup is a join, the tag mutation is the Catalyst
-    ``tag_upsert`` expression, writeback is the keyed upsert writer.
-    Nothing iterates on the driver, so this is the shape that scales to
-    a 1000-executor cluster (swap parquet for a MERGE-capable table
-    format in production).
+    ``tag_upsert`` expression, writeback rewrites the table. Nothing
+    iterates on the driver, so this is the shape that scales to a
+    1000-executor cluster.
 
-    Store schema: (_id string, revision string, tags array<struct>).
-    Unknown _ids are dead-lettered to ``store_path + '.deadletter'``
-    instead of failing the batch (R16).
+    Store schema: (_id string, revision string, tags array<struct>,
+    seq long). Unknown _ids are dead-lettered to
+    ``store_path + '.deadletter'`` as (_id string, seq long, reason
+    string) instead of failing the batch (R16).
+
+    One pass per micro-batch:
+
+    1. the batch's keys (``_id``, max ``seq``) are materialised with
+       ``localCheckpoint`` — the only evaluation of the lazy batch, so
+       the source reader, decode and parse run once per record — and
+       an empty batch returns here;
+    2. one full-outer join of the store with those keys gives, per key,
+       the tagged row (a stored document that lacks the tag), the
+       unchanged row (every other stored document, including matched
+       ones already tagged) or a missing flag (a key the store lacks);
+    3. that result is materialised once with ``localCheckpoint``: the
+       plan barrier that keeps the overwrite below from re-reading the
+       files it replaces. Observed metrics count the tagged and missing
+       rows during the same pass;
+    4. the store is rewritten from it only if a row was tagged, and
+       dead letters are appended only if a key was missing.
+
+    A tagged row's version is ``greatest(stored seq, batch seq) + 1``,
+    so it always exceeds what the store held. Rows that already carry
+    the tag keep their version, so a replayed batch leaves the store
+    untouched (its unknown ids are dead-lettered again). The rewrite still covers the whole store: plain parquet has no MERGE
+    (a table format such as Delta/Iceberg would rewrite only the files
+    a batch touched).
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from arc_kinesis_tagging_spark.functions.arrays import make_tag, tag_upsert
-    from arc_kinesis_tagging_spark.sources.readers import upsert_by_key_parquet
+    from arc_kinesis_tagging_spark.functions.arrays import (
+        make_tag,
+        tag_contains,
+        tag_upsert,
+    )
 
     t = tag or {"slug": AUTOTAG[0], "text": AUTOTAG[1]}
     tag_col = make_tag(t["slug"], t["text"])
+    KEEP, TAGGED, MISSING = 0, 1, 2
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        seen = Observation()
+        keys = (
+            batch_df.groupBy("_id")
+            .agg(F.max("seq").alias("__seq"), F.lit(True).alias("__hit"))
+            .observe(seen, F.count(F.lit(1)).alias("keys"))
+            .localCheckpoint(eager=True)
+        )
+        if not seen.get["keys"]:
             return
-        keys = batch_df.select("_id", "seq").groupBy("_id").agg(
-            F.max("seq").alias("seq")
-        )
         store = spark.read.parquet(store_path)
-        # enrichment lookup (R12) as a join against the store; the
-        # batch's seq (version) wins over the store's stored seq.
-        # Both sides must be MATERIALIZED (localCheckpoint) before the
-        # upsert below overwrites the store files a lazy plan would
-        # re-read.
-        matched = keys.join(store.drop("seq"), "_id", "inner").localCheckpoint(eager=True)
-        missing = keys.join(store, "_id", "left_anti").localCheckpoint(eager=True)
-        # tag decision (R13) + idempotent array upsert (R14). The
-        # written version must strictly exceed the stored one (seq+1):
-        # a tagged row tying the seed's version would make the upsert
-        # winner arbitrary. Replays rewrite the same seq+1 with
-        # identical content, so idempotency holds.
-        tagged = matched.withColumn("tags", tag_upsert(F.col("tags"), tag_col)).withColumn(
-            "seq", F.col("seq") + 1
+        # lookup (R12) and tag decision (R13): a stored document the
+        # batch names is tagged unless it already carries the tag
+        status = (
+            F.when(F.col("__stored").isNull(), MISSING)
+            .when(F.col("__hit").isNull() | tag_contains(F.col("tags"), tag_col), KEEP)
+            .otherwise(TAGGED)
         )
-        # keyed upsert writeback (R15): last-writer-wins by seq
-        upsert_by_key_parquet(spark, tagged, store_path, "_id", "seq")
-        # dead letters (R16): unknown documents, never a failed batch
-        if not missing.isEmpty():
-            missing.withColumn("reason", F.lit("document_not_found")).write.mode(
-                "append"
-            ).parquet(store_path + ".deadletter")
+        tagged = F.col("__status") == TAGGED
+        # idempotent array upsert (R14) on the tagged rows only; the
+        # stored revision is kept, as in the reference's GET-mutate-PUT
+        counts = Observation()
+        merged = (
+            store.withColumn("__stored", F.lit(True))
+            .join(keys, "_id", "full_outer")
+            .withColumn("__status", status)
+            .withColumns(
+                {
+                    "tags": F.when(tagged, tag_upsert(F.col("tags"), tag_col)).otherwise(
+                        F.col("tags")
+                    ),
+                    "seq": F.when(tagged, F.greatest("seq", "__seq") + 1).otherwise(
+                        F.col("seq")
+                    ),
+                }
+            )
+            .observe(
+                counts,
+                F.count_if(tagged).alias("tagged"),
+                F.count_if(F.col("__status") == MISSING).alias("missing"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        n = counts.get
+        # keyed writeback (R15), then dead letters (R16): unknown
+        # documents, never a failed batch
+        if n["tagged"]:
+            merged.filter(F.col("__status") != MISSING).select(*store.columns).write.mode(
+                "overwrite"
+            ).parquet(store_path)
+        if n["missing"]:
+            merged.filter(F.col("__status") == MISSING).select(
+                "_id", F.col("__seq").alias("seq"), F.lit("document_not_found").alias("reason")
+            ).write.mode("append").parquet(store_path + ".deadletter")
 
     return write_batch
 

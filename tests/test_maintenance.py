@@ -1,5 +1,8 @@
 """Small-file compaction and the streaming -> durable parquet upsert
-path (stream pipeline feeding upsert_by_key_parquet via foreachBatch)."""
+paths (stream pipeline feeding upsert_by_key_parquet, and the one-pass
+autotag_batch_sink, via foreachBatch)."""
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -84,13 +87,46 @@ def test_stream_to_parquet_upsert(spark, tmp_path):
     assert {r["_id"]: r["revision"] for r in got.collect()} == {"a": "r2", "b": "r1"}
 
 
-def test_distributed_autotag_batch_sink(spark, tmp_path):
-    """The fully-DataFrame autotag sink: store as keyed parquet,
-    lookup=join, mutate=tag_upsert expression, writeback=keyed upsert;
-    unknown ids dead-letter; replay is idempotent."""
+TAG = {"slug": "kinesis-autotag", "text": "kinesis autotag"}
+STORE_DDL = "_id string, revision string, tags array<struct<slug:string,text:string>>, seq long"
+
+
+def _drain_autotag(spark, src, store, ck):
+    """availableNow drain of ``src`` through story_pipeline into
+    foreachBatch(autotag_batch_sink); returns the finished query."""
     from arc_kinesis_tagging_spark.streaming.sinks import autotag_batch_sink
 
-    TAG = {"slug": "kinesis-autotag", "text": "kinesis autotag"}
+    q = (
+        story_pipeline(read_record_stream(spark, src))
+        .writeStream.foreachBatch(autotag_batch_sink(spark, store))
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+def _store_rows(spark, store):
+    return {r["_id"]: r.asDict(recursive=True) for r in spark.read.parquet(store).collect()}
+
+
+def _parquet_files(path):
+    """{parquet file: (inode, mtime, size)}: changes iff a file is rewritten."""
+    out = {}
+    for name in os.listdir(path):
+        if name.endswith(".parquet"):
+            st = os.stat(os.path.join(path, name))
+            out[name] = (st.st_ino, st.st_mtime_ns, st.st_size)
+    return out
+
+
+def test_distributed_autotag_batch_sink(spark, tmp_path):
+    """The fully-DataFrame autotag sink: store as keyed parquet,
+    lookup=join, mutate=tag_upsert expression, writeback=store rewrite;
+    unknown ids dead-letter with a stable schema; a replay is
+    idempotent down to the store's files."""
     store = str(tmp_path / "docstore")
     seed = spark.createDataFrame(
         [
@@ -98,7 +134,7 @@ def test_distributed_autotag_batch_sink(spark, tmp_path):
             ("b", "r1", [("politics", "Politics")], 0),
             ("c", "r1", [(TAG["slug"], TAG["text"])], 0),
         ],
-        "_id string, revision string, tags array<struct<slug:string,text:string>>, seq long",
+        STORE_DDL,
     )
     seed.write.parquet(store)
 
@@ -109,27 +145,86 @@ def test_distributed_autotag_batch_sink(spark, tmp_path):
         [(story("a", "r2"), 0), (story("c", "r2"), 1), (story("ghost", "r1"), 0)],
     )
 
-    def run(ck):
-        q = (
-            story_pipeline(read_record_stream(spark, src))
-            .writeStream.foreachBatch(autotag_batch_sink(spark, store))
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run("ck1")
-    rows = {r["_id"]: [t.asDict() for t in (r["tags"] or [])] for r in spark.read.parquet(store).collect()}
+    _drain_autotag(spark, src, store, str(tmp_path / "ck1"))
+    full = _store_rows(spark, store)
+    rows = {k: r["tags"] or [] for k, r in full.items()}
     assert rows["a"] == [TAG]
     assert rows["b"] == [{"slug": "politics", "text": "Politics"}]  # untouched
     assert rows["c"] == [TAG]  # idempotent: already tagged
+    # the tagged row's version passes both the stored and the batch seq;
+    # rows that did not change keep theirs, as does the stored revision
+    assert {k: (r["revision"], r["seq"]) for k, r in full.items()} == {
+        "a": ("r1", 1), "b": ("r1", 0), "c": ("r1", 0),
+    }
+    dl = spark.read.parquet(store + ".deadletter")
+    assert dl.schema.simpleString() == "struct<_id:string,seq:bigint,reason:string>"
+    assert {(r["_id"], r["reason"]) for r in dl.collect()} == {("ghost", "document_not_found")}
+    # replay with fresh checkpoint: the store is unchanged, row for row
+    # and file for file (nothing to tag, so nothing is rewritten)
+    files = _parquet_files(store)
+    _drain_autotag(spark, src, store, str(tmp_path / "ck2"))
+    assert _store_rows(spark, store) == full
+    assert _parquet_files(store) == files
+    # the replayed dead letter appends under the same schema
+    dl2 = spark.read.parquet(store + ".deadletter")
+    assert dl2.schema == dl.schema
+    assert sorted(r["_id"] for r in dl2.collect()) == ["ghost", "ghost"]
+
+
+def test_autotag_sink_tags_doc_with_newer_stored_seq(spark, tmp_path):
+    """A stored version far above the batch's seq must not outrank the
+    tag: the document is tagged (not silently dropped, not
+    dead-lettered) and its version rises past the stored one."""
+    store = str(tmp_path / "docstore")
+    spark.createDataFrame([("a", "r1", None, 100)], STORE_DDL).write.parquet(store)
+    src = str(tmp_path / "src")
+    write_stream_fixture(spark, src, [(story("a", "r2"), 0)])
+    _drain_autotag(spark, src, store, str(tmp_path / "ck"))
+    row = _store_rows(spark, store)["a"]
+    assert row["tags"] == [TAG]
+    assert row["seq"] == 101 and row["revision"] == "r1"
+    assert not os.path.exists(store + ".deadletter")
+
+
+def test_autotag_sink_unknown_only_batch_keeps_store_files(spark, tmp_path):
+    """A batch whose ids are all unknown rewrites no store file and
+    dead-letters every id."""
+    store = str(tmp_path / "docstore")
+    spark.createDataFrame(
+        [("a", "r1", None, 0), ("b", "r1", [(TAG["slug"], TAG["text"])], 3)], STORE_DDL
+    ).write.parquet(store)
+    before_rows, before_files = _store_rows(spark, store), _parquet_files(store)
+    src = str(tmp_path / "src")
+    write_stream_fixture(
+        spark, src, [(story(i, "r1"), n % 2) for n, i in enumerate(["x", "y", "z", "x"])]
+    )
+    _drain_autotag(spark, src, store, str(tmp_path / "ck"))
+    assert _parquet_files(store) == before_files
+    assert _store_rows(spark, store) == before_rows
     dl = spark.read.parquet(store + ".deadletter").collect()
-    assert {r["_id"] for r in dl} == {"ghost"}
-    # replay with fresh checkpoint: tags unchanged (no duplicates)
-    run("ck2")
-    rows2 = {r["_id"]: [t.asDict() for t in (r["tags"] or [])] for r in spark.read.parquet(store).collect()}
-    assert rows2 == rows
+    assert sorted((r["_id"], r["seq"]) for r in dl) == [("x", 3), ("y", 1), ("z", 2)]
+    assert {r["reason"] for r in dl} == {"document_not_found"}
+
+
+def test_autotag_sink_reads_each_source_record_once(spark, tmp_path):
+    """The sink evaluates each micro-batch once: summed over the
+    drain's batches, the source reports exactly one input row per
+    fixture record (a sink that runs one action per step re-reads the
+    batch each time and reports a multiple)."""
+    store = str(tmp_path / "docstore")
+    spark.createDataFrame(
+        [(f"d{i}", "r1", None, 0) for i in range(6)], STORE_DDL
+    ).write.parquet(store)
+    src = str(tmp_path / "src")
+    records = [(story(f"d{i % 8}", f"r{i}"), i % 2) for i in range(24)]  # d6, d7 unknown
+    records.append((b"not gzip", 0))  # routes to the dead-letter class, never the sink
+    n = write_stream_fixture(spark, src, records)
+    q = _drain_autotag(spark, src, store, str(tmp_path / "ck"))
+    assert sum(p.numInputRows for p in q.recentProgress) == n
+    rows = _store_rows(spark, store)
+    assert all(rows[f"d{i}"]["tags"] == [TAG] for i in range(6))
+    dl = spark.read.parquet(store + ".deadletter").collect()
+    assert sorted(r["_id"] for r in dl) == ["d6", "d7"]
 
 
 def test_orc_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
